@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Analytics cross-validation dump: read the refined stage CSV produced by
   * RefineDump/RefineBench, shape it into `all_transactions`, run OUR three
@@ -10,14 +10,8 @@ import org.apache.spark.sql.SparkSession
 object AnalyticsDump {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(8)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "8m")
     val cfg = Pipeline.loadConfigs(spark, s"$dir/configs")
     val refined = Refine.canonicalize(
       Load.readStageCsv(spark, s"$dir/data/refined_all_banks_spark.csv"))

@@ -1,7 +1,8 @@
 package graft.etl
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.GraftSession
 
 /** Refine-stage throughput harness: synthesize `args(1)` unified rows
   * (deterministic mix of payment keywords, e.Point strings, wallets,
@@ -14,17 +15,11 @@ object RefineBench {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val n = if (args.length > 1) args(1).toLong else 200000L
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      // split the single stage CSV into ~8MB tasks: the refine pipeline is
-      // narrow and coalesce(1) concatenates splits in offset order, so the
-      // stage parallelizes across cores with row order preserved
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(8)
+    // split the single stage CSV into ~8MB tasks: the refine pipeline is
+    // narrow and coalesce(1) concatenates splits in offset order, so the
+    // stage parallelizes across cores with row order preserved
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "8m")
     ExampleData.write(dir) // configs
     import Schema._
 

@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Cross-validation dump: materialize the example corpus, run OUR extract
   * and refine stages, and write the two stage CSVs (`result_all_banks.csv`,
@@ -11,13 +11,7 @@ import org.apache.spark.sql.SparkSession
 object RefineDump {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(8)
     ExampleData.write(dir)
     val cfg = Pipeline.loadConfigs(spark, s"$dir/configs")
     val extracted = Extract.extractAll(spark, s"$dir/data", cfg.banks)

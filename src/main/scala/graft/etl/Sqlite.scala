@@ -162,9 +162,8 @@ object Sqlite {
         // per storage class, rowid tiebreak via stable sort), bulk-build
         idxsHere.zipWithIndex.foreach { case (ix, j) =>
           val sorted = idxKeys(j).sortWith((a, b) => keyCompare(a._1, b._1) < 0)
-          val payloads = sorted.iterator.map { case (k, rid) =>
-            indexRecord(k, rid)
-          }
+          val payloads = sorted.iterator
+            .map { case (k, rid) => indexRecord(k, rid) }.toVector
           val (idxRoot, np) = buildIndexBtree(raf, payloads, nextPage)
           nextPage = np
           master += (("index", ix.name, name, idxRoot,
@@ -386,7 +385,7 @@ object Sqlite {
     * recursively at every level.
     */
   private def buildIndexBtree(raf: RandomAccessFile,
-                              payloads: Iterator[Array[Byte]],
+                              payloads: IndexedSeq[Array[Byte]],
                               firstFreePage: Int): (Int, Int) = {
     var nextPage = firstFreePage
 
@@ -395,68 +394,36 @@ object Sqlite {
       nextPage += used
       varint(p.length.toLong) ++ local
     }
-    def leafCellSize(p: Array[Byte]): Int =
+    def cellSize(p: Array[Byte]): Int =
       varint(p.length.toLong).length + localSize(p.length, MaxIndexPayload)
 
-    // ---- leaf level. `dangling` holds an entry that closed a page and
-    // becomes the up-separator IF another entry follows; if the stream
-    // ends first it becomes a final one-entry leaf instead (a separator
-    // needs a right sibling).
+    // ---- leaf level. The final leaf is never empty: with no entries it
+    // is the (empty) root, otherwise it holds at least the last entry.
     var pages = Vector.empty[Int]
     var seps = Vector.empty[Array[Byte]]
     val pb = new PageBuilder(IndexLeaf)
-    var dangling: Option[Array[Byte]] = None
     def flushLeafPage(): Unit = {
       writePage(raf, nextPage, pb.render())
       pages :+= nextPage
       nextPage += 1
       pb.reset()
     }
-    payloads.foreach { p =>
-      dangling.foreach { d => seps :+= d; dangling = None }
-      if (pb.cells > 0 && !pb.fitsBytes(leafCellSize(p))) {
-        flushLeafPage()
-        dangling = Some(p)
-      } else pb.add(leafCellOf(p))
+    val leafSeps =
+      separatorsAt(payloads.map(p => cellSize(p) + 2), headerSize = 8)
+    payloads.indices.foreach { i =>
+      if (leafSeps(i)) { flushLeafPage(); seps :+= payloads(i) }
+      else pb.add(leafCellOf(payloads(i)))
     }
-    dangling match {
-      case Some(d) => pb.add(leafCellOf(d)); flushLeafPage()
-      case None => if (pb.cells > 0 || pages.isEmpty) flushLeafPage()
-    }
+    flushLeafPage()
 
     // ---- interior levels. Cell i pairs (child i, separator i); a page
     // covering children a..b materializes cells a..b-1 with rightmost
-    // child b, and separator b moves up. Boundaries are PLANNED from cell
-    // sizes first so overflow chains are written exactly once, then a
-    // boundary landing on the last cell is shifted left (it would leave
-    // the final page with only a right pointer — structurally degenerate).
+    // child b, and separator b moves up.
     while (pages.length > 1) {
       val children = pages
       val ss = seps
-      val m = ss.length // == children.length - 1 cells at this level
-      val boundaries = mutable.ArrayBuffer.empty[Int]
-      var used = 0
-      var cellsInPage = 0
-      var i = 0
-      while (i < m) {
-        val sz = 4 + varint(ss(i).length.toLong).length +
-          localSize(ss(i).length, MaxIndexPayload) + 2 // +2 pointer slot
-        if (cellsInPage > 0 && used + sz > PageSize - 12) {
-          boundaries += i
-          used = 0
-          cellsInPage = 0
-        } else {
-          used += sz
-          cellsInPage += 1
-        }
-        i += 1
-      }
-      if (boundaries.nonEmpty && boundaries.last == m - 1) {
-        require(boundaries.length < 2 || boundaries(boundaries.length - 2)
-          < m - 2, "index interior boundary collision")
-        boundaries(boundaries.length - 1) = m - 2
-      }
-      val bset = boundaries.toSet
+      val bset =
+        separatorsAt(ss.map(p => 4 + cellSize(p) + 2), headerSize = 12)
       val newPages = Vector.newBuilder[Int]
       val newSeps = Vector.newBuilder[Array[Byte]]
       val ip = new PageBuilder(IndexInterior)
@@ -467,8 +434,7 @@ object Sqlite {
         nextPage += 1
         ip.reset()
       }
-      var j = 0
-      while (j < m) {
+      ss.indices.foreach { j =>
         if (bset(j)) {
           flushInterior(children(j))
           newSeps += ss(j)
@@ -479,13 +445,39 @@ object Sqlite {
           ip.add(ByteBuffer.allocate(4).putInt(children(j)).array() ++
             varint(ss(j).length.toLong) ++ local)
         }
-        j += 1
       }
       flushInterior(children.last)
       pages = newPages.result()
       seps = newSeps.result()
     }
     (pages.head, nextPage)
+  }
+
+  /** Plan one level of an index bulk load from cell sizes (each including
+    * its 2-byte pointer slot), before any page or overflow chain is
+    * written: the entry that does not fit the open page closes it and
+    * moves up as a separator. A separator needs a right sibling, so one
+    * that would land on the LAST entry moves one entry left instead and
+    * the last entry opens the final page alone — every entry then lives
+    * exactly once in a reachable page.
+    */
+  private def separatorsAt(sizes: IndexedSeq[Int],
+                           headerSize: Int): Set[Int] = {
+    val n = sizes.length
+    val at = mutable.ArrayBuffer.empty[Int]
+    var used = 0 // bytes of the open page's cells; 0 = no cell yet
+    sizes.indices.foreach { i =>
+      if (used > 0 && headerSize + used + sizes(i) > PageSize) {
+        at += i
+        used = 0
+      } else used += sizes(i)
+    }
+    if (at.nonEmpty && at.last == n - 1) {
+      val prev = if (at.length > 1) at(at.length - 2) else -1
+      require(prev < n - 3, "index page boundary collision")
+      at(at.length - 1) = n - 2
+    }
+    at.toSet
   }
 
   // ------------------------------------------------------------ records

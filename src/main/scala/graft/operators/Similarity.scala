@@ -1356,8 +1356,9 @@ object Similarity {
     // Output identical — (adist asc, neighbor_id asc) is a total order,
     // so "the k best" does not depend on how they are found (TopKAggSpec
     // pins agg == window on random data; SimilaritySpec pins this path).
-    // ×1000 probe (tools.Q105Prof): the agg form cut the post-scan cost,
-    // and the remaining wall is the LINEAR candidate-scan kernel.
+    // ×1000 probe (SCALE.md "Round-10 correction + fix"): the agg form
+    // cut the post-scan cost, and the remaining wall is the LINEAR
+    // candidate-scan kernel.
     val ranked = scored.groupBy(col("query_id"))
       .agg(graft.plans.AggExpressions
         .topKByScore(-col("adist"), col("neighbor_id"), k).as("_top"))
@@ -1367,7 +1368,7 @@ object Similarity {
   }
 
   /** The two internal stages of [[ivfPqKnn]], exposed for stage bisection
-    * (tools.Q105Prof): `_1` = the encoded corpus (cell, neighbor_id,
+    * (SCALE.md "Round-10 correction + fix"): `_1` = the encoded corpus (cell, neighbor_id,
     * codes), `_2` = the ADC-scored candidate stream (query_id,
     * neighbor_id, adist) BEFORE any top-k — callers that want a bounded
     * top-k without a window sort can aggregate `_2` with

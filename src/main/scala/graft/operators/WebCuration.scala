@@ -158,8 +158,8 @@ object WebCuration {
   /** Parse a PSL rule file from a filesystem path — the deploy seam for
     * a real publicsuffix.org snapshot (the list updates ~weekly; a
     * resource-baked copy would pin it to the build). The kernel is
-    * measured FLAT in rule count up to full-PSL size (9k rules,
-    * `tools/WebProf`), so swapping in the real list changes nothing but
+    * measured FLAT in rule count up to full-PSL size (0.14 s/1M rows at
+    * 9 015 rules vs 0.23 s at 15; SCALE.md, URL/domain web curation), so swapping in the real list changes nothing but
     * the rules. */
   def loadPsl(path: String): Seq[PslRule] = {
     val src = scala.io.Source.fromFile(path, "UTF-8")

@@ -21,9 +21,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * argmin pattern references the k×dim distance transform TWICE. Worse,
   * when the derived cell becomes a join key, the join's pushed-down
   * `isnotnull(cell)` filter INLINES the whole transform again below the
-  * projection (tools.Q105Prof measured the q105 ×1000 candidate scan
-  * dominated by exactly this — the distance transform evaluated up to
-  * 4× per corpus row, boxed). Each expression here is ONE fused loop per
+  * projection (the q105 ×1000 stage bisection, SCALE.md "Round-10
+  * correction + fix", measured the candidate scan dominated by exactly
+  * this — the distance transform evaluated up to 4× per corpus row,
+  * boxed). Each expression here is ONE fused loop per
   * evaluation, allocation-free (except the PQ code array), inside
   * whole-stage codegen.
   *

@@ -162,7 +162,7 @@ object StreamingPipeline {
 
   /** Store-size threshold (bytes) below which batches write FLAT and the
     * probe skips bucket pruning. The bucketed layout is a measured win at
-    * multi-million-digest stores (DigestPruneProbe: 59.2MB/6 files vs
+    * multi-million-digest stores (SCALE.md, Streaming: 59.2MB/6 files vs
     * 157.7MB/16 per batch at 5M digests) but pure overhead below it —
     * every batch would pay a touched-prefix distinct job, a
     * repartition(pfx) shuffle, and 16-bucket partition discovery to

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** r16 conf A/B: run named SparkEntry queries with a runtime SQLConf
   * toggled between two values, as interleaved same-JVM draws (the only
@@ -15,18 +15,8 @@ object ConfProf {
     val reps = args.lift(4).map(_.toInt).getOrElse(4)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.session.timeZone", "UTC")
-      // AQE may re-plan cached-frame materialization (see graft.Bench)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     val names = qcsv.split(",").toSeq
     val qs = names.map(n => n -> graft.SparkEntry.queries(n))
     // warm once per arm (codegen, file listing)

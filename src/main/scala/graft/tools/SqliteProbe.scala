@@ -1,22 +1,19 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
+import graft.GraftSession
 import graft.etl.Sqlite
 
-/** One-off: write sample SQLite files for external validation with the
-  * system sqlite3 (driver-side python). Run:
+/** Write the SQLite writer's fixtures for external validation with the
+  * real sqlite3 library: `<out>` (typed tables, overflow chains, five
+  * indexes), `<out>.deep` (two interior levels) and `<out>.boundary` (an
+  * index whose last entry closes a leaf). Run:
   * sbt "runMain graft.tools.SqliteProbe /tmp/probe.db"
+  * then `python3 tools/check_sqlite.py` on each of the three files.
   */
 object SqliteProbe {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/probe.db")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(4)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 
@@ -55,6 +52,12 @@ object SqliteProbe {
     val n2 = Sqlite.writeTables(s"$out.deep", Seq("deep" -> deep),
       indexes = Seq(Sqlite.IndexSpec("idx_deep_s", "deep", "s")))("deep")
     println(s"[sqliteprobe] wrote deep=$n2 to $out.deep")
+    // third fixture: an index whose LAST entry is the one that closes a
+    // leaf — 200-byte keys fill a leaf at 19 entries, so one leaf + 1
+    val edge = (1 to 20).map(i => f"$i%03d" + "k" * 197).toDF("k")
+    val n3 = Sqlite.writeTables(s"$out.boundary", Seq("edge" -> edge),
+      indexes = Seq(Sqlite.IndexSpec("idx_edge_k", "edge", "k")))("edge")
+    println(s"[sqliteprobe] wrote edge=$n3 to $out.boundary")
     spark.stop()
   }
 }

@@ -268,6 +268,19 @@ class EtlPipelineSpec extends SparkSpec {
       assert(spark.read.parquet(s"$out/$t").count() > 0, t)
   }
 
+  test("pipeline: run() leaves no cached copy of the shaped frame") {
+    val out = Files.createTempDirectory("graft-out-cache").toString
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    Pipeline.run(spark, s"$dir/data", s"$dir/configs", out)
+    // The analyses re-read the written parquet, so a cache of the shaped
+    // frame would only pin executor memory for the rest of the session.
+    // A cached frame's RDD is named after its physical plan: every cache
+    // run() leaves behind must scan its own output, not the statements.
+    val left = spark.sparkContext.getPersistentRDDs.view
+      .filterKeys(k => !before(k)).values.map(_.name).toSeq
+    assert(left.forall(_.contains(s"$out/all_transactions")), left)
+  }
+
   // ------------------------------------------------- decimal money mode
 
   test("refine: decimal money mode yields DECIMAL(18,2) columns whose " +

@@ -406,8 +406,9 @@ class SimilaritySpec extends SparkSpec {
     val adc = recall(Similarity.ivfPqKnn(queries, emb, k = 5,
       oneCell, cb))
     // Default shortlist (200). Measured curve on exactly this data/config
-    // (tools/PqSweep, iters=2 ksub=16): rerank@5 = 0.65 / 0.85 / 0.97 at
-    // shortlist 50 / 100 / 200; ADC@5 ~0.24 regardless of training depth.
+    // (a one-off shortlist sweep, iters=2 ksub=16; this comment is its
+    // only record): rerank@5 = 0.65 / 0.85 / 0.97 at shortlist
+    // 50 / 100 / 200; ADC@5 ~0.24 regardless of training depth.
     // Shortlist depth, not codebook quality, is what buys recall here.
     val reranked = recall(Similarity.ivfPqKnnRerank(queries, emb, k = 5,
       oneCell, cb))

@@ -24,6 +24,16 @@ class SparkEntrySpec extends SparkSpec {
     }
   }
 
+  test("the test session plans under the benched SQL confs") {
+    val conf = spark.conf
+    assert(conf.get(
+      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") == "true")
+    assert(conf.get("spark.sql.codegen.cache.maxEntries") == "5000")
+    assert(conf.getOption(
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum") ==
+      Some(conf.get("spark.sql.shuffle.partitions")))
+  }
+
   test("entry is the declared flagship query on sf0.001") {
     val df = SparkEntry.entry(spark)
     assert(df.columns.contains("segment"))

@@ -210,6 +210,23 @@ class SqliteSpec extends SparkSpec {
     }
   }
 
+  test("index leaves: every entry stays reachable, including when the " +
+    "last entry is the one that closes a leaf") {
+    // 200-byte keys fill an index leaf at 19 entries, so n = 1..45 covers
+    // every leaf ending, among them a final entry that does not fit its
+    // leaf (n = 20, 40)
+    (1 to 45).foreach { n =>
+      val p = tmp(s"leaf$n.db")
+      val keys = (1 to n).map(i => f"$i%03d" + "k" * 197)
+      Sqlite.writeTables(p, Seq("t" -> keys.toDF("k")),
+        indexes = Seq(Sqlite.IndexSpec("idx_k", "t", "k")))
+      keys.zipWithIndex.foreach { case (k, i) =>
+        val got = Sqlite.Reader.indexPointLookup(p, "idx_k", k).map(_._1)
+        assert(got == Seq(i + 1L), s"n=$n, key ${i + 1}: rowids $got")
+      }
+    }
+  }
+
   test("reader: index keys on overflow chains (payload > 1002B) still " +
     "descend and resolve") {
     val p = tmp("of.db")
