@@ -11,11 +11,14 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).headOption
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    // the filter selects both the dumps and their oracle entries, so a
+    // subset run checks clean against its own oracle_sql.json
+    def selected(name: String) = only.forall(_.exists(name.contains))
     val spark = GraftSession(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.exists(name.contains)) }
+      .filter { case (name, _) => selected(name) }
       .foreach { case (name, fn) =>
       val t0 = System.nanoTime()
       try {
@@ -40,6 +43,7 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
+      .filter { case (k, _) => selected(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -5,9 +5,11 @@ import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType,
+  StringType, StructField, StructType, TimestampType}
 
 import graft.Tables
 import graft.streaming.StreamingPipeline
@@ -130,6 +132,46 @@ object StreamingQueries {
     }
   }
 
+  /** One gate run's working dirs under a fresh scratch dir: `out/` takes
+    * the `batch_id`-stamped emissions, `dir(name)` names a state dir.
+    */
+  private final class Gate(work: File) {
+    val out: String = new File(work, "out").getPath
+    def dir(name: String): String = new File(work, name).getPath
+    /** Appends one micro-batch's emission to `out/`, stamped with its
+      * batch id. */
+    val append: (DataFrame, Long) => Unit = (df, batchId) =>
+      df.withColumn("batch_id", lit(batchId)).write.mode("append")
+        .parquet(out)
+  }
+
+  /** The one gate runner: builds the gate's streaming query on a fresh
+    * per-run scratch dir, then runs it to completion under
+    * [[withGateConfs]] — checkpointed, with the AvailableNow trigger, so
+    * the query drains every chunk file and stops.
+    */
+  private def runGate(s: SparkSession, name: String)(
+      query: Gate => DataStreamWriter[Row]): Gate = {
+    val g = new Gate(scratchDir(s"graft_$name"))
+    new File(g.out).mkdirs()
+    withGateConfs(s, 3) {
+      query(g)
+        .option("checkpointLocation", g.dir("ckpt"))
+        .trigger(Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
+    }
+    g
+  }
+
+  /** The gates' file source: one chunk file of `inDir` per micro-batch,
+    * in mtime order. */
+  private def chunkSource(s: SparkSession, inDir: File,
+                          schema: StructType): DataFrame =
+    s.readStream.schema(schema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(inDir.getPath)
+
   /** Streaming incremental dedup over a file-chunked corpus (q82's
     * continuous form, `StreamingPipeline.incrementalDedupStream`).
     *
@@ -159,27 +201,12 @@ object StreamingQueries {
     */
   private def q111(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-    val work = scratchDir("graft_q111")
     val inDir = cachedChunks(s"q111|$dir|3")(writeChunks(docs, "doc_id", _, 3))
-    val digestDir = new File(work, "digests").getPath
-    val outDir = new File(work, "out")
-    outDir.mkdirs()
-    withGateConfs(s, 3) {
-      val stream = s.readStream
-        .schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inDir.getPath)
-      val q = StreamingPipeline.incrementalDedupStream(
-          stream, "doc_id", "text", digestDir) { (kept, batchId) =>
-          kept.withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outDir.getPath)
-        }
-        .option("checkpointLocation", new File(work, "ckpt").getPath)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    val g = runGate(s, "q111") { g =>
+      StreamingPipeline.incrementalDedupStream(chunkSource(s, inDir,
+        docs.schema), "doc_id", "text", g.dir("digests"))(g.append)
     }
-    s.read.parquet(outDir.getPath)
+    s.read.parquet(g.out)
       .select(col("batch_id"), col("content_hash"), col("keep_id"),
         col("batch_dups"))
       .orderBy(col("batch_id"), col("content_hash"))
@@ -210,28 +237,13 @@ object StreamingQueries {
   private def q113(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding"))
-    val work = scratchDir("graft_q113")
     val inDir = cachedChunks(s"q113|$dir|3")(writeChunks(emb, "vec_id", _, 3))
-    val stateDir = new File(work, "state").getPath
-    val outDir = new File(work, "out")
-    outDir.mkdirs()
-    withGateConfs(s, 3) {
-      val stream = s.readStream
-        .schema(emb.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inDir.getPath)
-      val q = StreamingPipeline.semDedupStream(stream,
-          VectorQueries.centroidsForProfiling, threshold = 0.4, stateDir) {
-          (res, batchId) =>
-            res.withColumn("batch_id", lit(batchId))
-              .write.mode("append").parquet(outDir.getPath)
-        }
-        .option("checkpointLocation", new File(work, "ckpt").getPath)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    val g = runGate(s, "q113") { g =>
+      StreamingPipeline.semDedupStream(chunkSource(s, inDir, emb.schema),
+        VectorQueries.centroidsForProfiling, threshold = 0.4,
+        g.dir("state"))(g.append)
     }
-    s.read.parquet(outDir.getPath)
+    s.read.parquet(g.out)
       .select(col("batch_id"), col("vec_id"), col("cell"),
         coalesce(col("dup_of"), lit(-1L)).as("dup_of"), col("kept"))
       .orderBy(col("batch_id"), col("vec_id"))
@@ -312,46 +324,22 @@ object StreamingQueries {
       when(col("event_id") % 13 === 0, least(natural + 2, lit(2)))
         .otherwise(natural))
     val sentinels = s.createDataFrame(
-      ((0 to 2).map(b => org.apache.spark.sql.Row(
+      ((0 to 2).map(b => Row(
         -(b + 1).toLong, new java.sql.Timestamp((chunkEnd(b) - 1) * 1000L),
-        "__wm", 0.0, b)) :+ org.apache.spark.sql.Row(
+        "__wm", 0.0, b)) :+ Row(
         -100L, new java.sql.Timestamp((chunkEnd(2) + 3600L * 1000) * 1000L),
         "__flush", 0.0, 3)).asJava,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("event_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("ts_utc",
-          org.apache.spark.sql.types.TimestampType),
-        org.apache.spark.sql.types.StructField("event_type",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("value",
-          org.apache.spark.sql.types.DoubleType),
-        org.apache.spark.sql.types.StructField("b",
-          org.apache.spark.sql.types.IntegerType))))
-    val work = scratchDir("graft_q115")
+      StructType(Seq(StructField("event_id", LongType),
+        StructField("ts_utc", TimestampType),
+        StructField("event_type", StringType),
+        StructField("value", DoubleType), StructField("b", IntegerType))))
     val inDir = cachedChunks(s"q115|$dir|4")(
       writeChunksPre(chunked.unionByName(sentinels), _, 4))
-    val outDir = new File(work, "out")
-    outDir.mkdirs()
-    withGateConfs(s, 3) {
-      val stream = s.readStream
-        .schema(chunked.drop("b").schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inDir.getPath)
-      val q = StreamingPipeline.hourlyEventCounts(stream)
-        .writeStream
-        .outputMode("append")
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          df.withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outDir.getPath)
-          ()
-        }
-        .option("checkpointLocation", new File(work, "ckpt").getPath)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    val g = runGate(s, "q115") { g =>
+      StreamingPipeline.eachBatch(StreamingPipeline.hourlyEventCounts(
+        chunkSource(s, inDir, chunked.drop("b").schema)))(g.append)
     }
-    s.read.parquet(outDir.getPath)
+    s.read.parquet(g.out)
       .filter(!col("event_type").startsWith("__"))
       .select(col("batch_id"), col("hour"), col("event_type"), col("n"),
         col("total_value"))
@@ -442,40 +430,22 @@ object StreamingQueries {
       .select(col("event_id").as("r_event_id"),
         col("ts_utc").as("r_ts_utc"), col("user_id").as("r_user_id"))
       .withColumn("b", expr("((r_event_id - 1) div 2) % 3"))
-    val work = scratchDir("graft_q118")
     val both = cachedChunks(s"q118|$dir|3") { w =>
       writeChunksPre(left, new File(w, "l"), 3)
       writeChunksPre(right, new File(w, "r"), 3)
       w
     }
-    val lIn = new File(both, "l/in")
-    val rIn = new File(both, "r/in")
-    val outDir = new File(work, "out")
-    outDir.mkdirs()
-    withGateConfs(s, 3) {
-      val ls = s.readStream.schema(left.drop("b").schema)
-        .option("maxFilesPerTrigger", "1").parquet(lIn.getPath)
-      val rs = s.readStream.schema(right.drop("b").schema)
-        .option("maxFilesPerTrigger", "1").parquet(rIn.getPath)
-      val q = StreamingPipeline.intervalJoin(ls, rs, "user_id",
-          lowerMs = 5L * 60 * 1000, upperMs = 30L * 60 * 1000,
+    val g = runGate(s, "q118") { g =>
+      StreamingPipeline.eachBatch(StreamingPipeline.intervalJoin(
+          chunkSource(s, new File(both, "l/in"), left.drop("b").schema),
+          chunkSource(s, new File(both, "r/in"), right.drop("b").schema),
+          "user_id", lowerMs = 5L * 60 * 1000, upperMs = 30L * 60 * 1000,
           watermark = "800 hours")
         .select(col("event_id"), col("r_event_id"), col("user_id"),
           (unix_micros(col("r_ts_utc")) - unix_micros(col("ts_utc")))
-            .as("delta_us"))
-        .writeStream
-        .outputMode("append")
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          df.withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outDir.getPath)
-          ()
-        }
-        .option("checkpointLocation", new File(work, "ckpt").getPath)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+            .as("delta_us")))(g.append)
     }
-    s.read.parquet(outDir.getPath)
+    s.read.parquet(g.out)
       .select(col("batch_id"), col("event_id"), col("r_event_id"),
         col("user_id"), col("delta_us"))
       .orderBy(col("event_id"), col("r_event_id"))
@@ -525,21 +495,13 @@ object StreamingQueries {
       col("o_orderkey").as("ver"), col("o_totalprice"),
       when(col("o_orderkey") % 13 === 0, least(natural + 2, lit(2)))
         .otherwise(natural).cast("int").as("b"))
-    val work = scratchDir("graft_q121")
     val inDir = cachedChunks(s"q121|$dir|3")(writeChunksPre(delta, _, 3))
-    val snapDir = new File(work, "snap").getPath
-    withGateConfs(s, 3) {
-      val stream = s.readStream.schema(delta.drop("b").schema)
-        .option("maxFilesPerTrigger", "1").parquet(inDir.getPath)
-      val q = StreamingPipeline.upsertStream(stream, Seq("k"), "ver",
-          snapDir)
-        .option("checkpointLocation", new File(work, "ckpt").getPath)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    val g = runGate(s, "q121") { g =>
+      StreamingPipeline.upsertStream(chunkSource(s, inDir,
+        delta.drop("b").schema), Seq("k"), "ver", g.dir("snap"))
     }
     (0 to 2).map { b =>
-      val d = new File(snapDir, f"v$b%05d")
+      val d = new File(g.dir("snap"), f"v$b%05d")
       require(d.isDirectory, s"missing snapshot version dir ${d.getPath}")
       s.read.parquet(d.getPath).withColumn("snap", lit(b.toLong))
     }.reduce(_ unionByName _)
@@ -610,45 +572,21 @@ object StreamingQueries {
     val chunked = ev.select(col("userId"), col("ms"),
       natural.cast("int").as("b"))
     val sentinels = s.createDataFrame(
-      ((0 to 2).map(b => org.apache.spark.sql.Row(
-        -(b + 1).toLong, (chunkEnd(b) - 1) * 1000L, b)) :+
-        org.apache.spark.sql.Row(
-          -100L, (chunkEnd(2) + 3600L * 1000) * 1000L, 3)).asJava,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("userId",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("ms",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("b",
-          org.apache.spark.sql.types.IntegerType))))
-    val work = scratchDir("graft_q129")
+      ((0 to 2).map(b =>
+        Row(-(b + 1).toLong, (chunkEnd(b) - 1) * 1000L, b)) :+
+        Row(-100L, (chunkEnd(2) + 3600L * 1000) * 1000L, 3)).asJava,
+      StructType(Seq(StructField("userId", LongType),
+        StructField("ms", LongType), StructField("b", IntegerType))))
     val inDir = cachedChunks(s"q129|$dir|4")(
       writeChunksPre(chunked.unionByName(sentinels), _, 4))
-    val outDir = new File(work, "out")
-    outDir.mkdirs()
-    withGateConfs(s, 3) {
+    val g = runGate(s, "q129") { g =>
       import s.implicits._
-      val stream = s.readStream
-        .schema(chunked.drop("b").schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inDir.getPath)
-        .as[graft.streaming.StreamingPipeline.UserEvent]
-      val q = graft.streaming.StreamingPipeline
-        .sessionize(stream, gapMs = 1800000L)
-        .toDF()
-        .writeStream
-        .outputMode("append")
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          df.withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outDir.getPath)
-          ()
-        }
-        .option("checkpointLocation", new File(work, "ckpt").getPath)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      StreamingPipeline.eachBatch(StreamingPipeline.sessionize(
+          chunkSource(s, inDir, chunked.drop("b").schema)
+            .as[StreamingPipeline.UserEvent], gapMs = 1800000L)
+        .toDF())(g.append)
     }
-    s.read.parquet(outDir.getPath)
+    s.read.parquet(g.out)
       .filter(col("userId") >= 0L)
       .select(col("batch_id"), col("userId").as("user_id"),
         col("sessionStart").as("session_start_ms"),
@@ -739,29 +677,14 @@ object StreamingQueries {
         stopwords = Seq("the", "a"))
       .withColumn("url", WebQueries.synthUrl)
       .select(col("doc_id"), col("url"), col("keep"), col("n_words"))
-    val work = scratchDir("graft_q145")
     val inDir = cachedChunks(s"q145|$dir|3")(
       writeChunks(fixture, "doc_id", _, 3))
-    val stateDir = new File(work, "state").getPath
-    val outDir = new File(work, "out")
-    outDir.mkdirs()
-    withGateConfs(s, 3) {
-      val stream = s.readStream
-        .schema(fixture.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inDir.getPath)
-      val q = StreamingPipeline.domainQualityStream(
-          stream, "url", "doc_id", "keep", "n_words", stateDir) {
-          (rollup, batchId) =>
-            rollup.withColumn("batch_id", lit(batchId))
-              .write.mode("append").parquet(outDir.getPath)
-        }
-        .option("checkpointLocation", new File(work, "ckpt").getPath)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    val g = runGate(s, "q145") { g =>
+      StreamingPipeline.domainQualityStream(chunkSource(s, inDir,
+          fixture.schema), "url", "doc_id", "keep", "n_words",
+        g.dir("state"))(g.append)
     }
-    s.read.parquet(outDir.getPath)
+    s.read.parquet(g.out)
       .select(col("batch_id"), col("domain"), col("n_docs"),
         col("parseable"), col("n_canonical"), col("keep_rate"),
         col("avg_words"), col("dup_rate"), col("block_score"))
@@ -835,29 +758,14 @@ object StreamingQueries {
     val docs = Tables.documents(s, dir)
       .filter(col("doc_id") < 1000L)
       .select(col("doc_id"), col("text"))
-    val work = scratchDir("graft_q148")
     val inDir = cachedChunks(s"q148|$dir|3")(
       writeChunks(docs, "doc_id", _, 3))
-    val stateDir = new File(work, "state").getPath
-    val outDir = new File(work, "out")
-    outDir.mkdirs()
-    withGateConfs(s, 3) {
-      val stream = s.readStream
-        .schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inDir.getPath)
-      val q = StreamingPipeline.minHashDedupStream(
-          stream, "doc_id", "text", stateDir, n = 3, threshold = 0.4,
-          numHashes = 64, bands = 32) { (em, batchId) =>
-          em.withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outDir.getPath)
-        }
-        .option("checkpointLocation", new File(work, "ckpt").getPath)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    val g = runGate(s, "q148") { g =>
+      StreamingPipeline.minHashDedupStream(chunkSource(s, inDir,
+          docs.schema), "doc_id", "text", g.dir("state"), n = 3,
+        threshold = 0.4, numHashes = 64, bands = 32)(g.append)
     }
-    s.read.parquet(outDir.getPath)
+    s.read.parquet(g.out)
       .select(col("batch_id"), col("id").as("doc_id"), col("dup_of"),
         col("kept"))
       .orderBy(col("batch_id"), col("doc_id"))
@@ -910,28 +818,13 @@ object StreamingQueries {
       .select(col("vec_id"), col("embedding"),
         (col("vec_id") % 4 === 0 && col("vec_id") % 3 =!= 1)
           .as("is_bench"))
-    val work = scratchDir("graft_q155")
     val inDir = cachedChunks(s"q155|$dir|3")(writeChunks(emb, "vec_id", _, 3))
-    val snapDir = new File(work, "snap").getPath
-    val outDir = new File(work, "out")
-    outDir.mkdirs()
-    withGateConfs(s, 3) {
-      val stream = s.readStream
-        .schema(emb.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inDir.getPath)
-      val q = StreamingPipeline.decontamStream(stream, "is_bench",
-          VectorQueries.centroidsForProfiling, threshold = 0.32, snapDir) {
-          (res, batchId) =>
-            res.withColumn("batch_id", lit(batchId))
-              .write.mode("append").parquet(outDir.getPath)
-        }
-        .option("checkpointLocation", new File(work, "ckpt").getPath)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    val g = runGate(s, "q155") { g =>
+      StreamingPipeline.decontamStream(chunkSource(s, inDir, emb.schema),
+        "is_bench", VectorQueries.centroidsForProfiling, threshold = 0.32,
+        g.dir("snap"))(g.append)
     }
-    s.read.parquet(outDir.getPath)
+    s.read.parquet(g.out)
       .select(col("batch_id"), col("vec_id"), col("cell"),
         col("contaminated_by"), col("n_hits"), col("max_sim"))
       .orderBy(col("batch_id"), col("vec_id"))
@@ -979,28 +872,13 @@ object StreamingQueries {
     val docs = Tables.documents(s, dir)
       .select(col("doc_id"), col("text"),
         (col("doc_id") % 20 === 0).as("is_bench"))
-    val work = scratchDir("graft_q161")
     val inDir = cachedChunks(s"q161|$dir|3")(writeChunks(docs, "doc_id", _, 3))
-    val storeDir = new File(work, "store").getPath
-    val outDir = new File(work, "out")
-    outDir.mkdirs()
-    withGateConfs(s, 3) {
-      val stream = s.readStream
-        .schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inDir.getPath)
-      val q = StreamingPipeline.bloomDecontamStream(stream, "is_bench",
-          storeDir, n = 4, mBits = 1 << 22, k = 3,
-          flagThreshold = 0.05) { (res, batchId) =>
-          res.withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outDir.getPath)
-        }
-        .option("checkpointLocation", new File(work, "ckpt").getPath)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    val g = runGate(s, "q161") { g =>
+      StreamingPipeline.bloomDecontamStream(chunkSource(s, inDir,
+          docs.schema), "is_bench", g.dir("store"), n = 4, mBits = 1 << 22,
+        k = 3, flagThreshold = 0.05)(g.append)
     }
-    s.read.parquet(outDir.getPath)
+    s.read.parquet(g.out)
       .select(col("batch_id"), col("id").as("doc_id"), col("n_shingles"),
         col("n_bloom_hits"), col("hit_ratio"), col("contaminated"))
       .orderBy(col("batch_id"), col("doc_id"))
@@ -1059,16 +937,9 @@ object StreamingQueries {
   private def q164(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
       .select(col("doc_id"), col("source"), col("text"))
-    val work = scratchDir("graft_q164")
     val inDir = cachedChunks(s"q164|$dir|3")(writeChunks(docs, "doc_id", _, 3))
-    val storeDir = new File(work, "store").getPath
-    val outDir = new File(work, "out")
-    outDir.mkdirs()
-    withGateConfs(s, 3) {
-      val stream = s.readStream
-        .schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inDir.getPath)
+    val g = runGate(s, "q164") { g =>
+      val grams = chunkSource(s, inDir, docs.schema)
         // r16: materialized token array — inlining tokens(text) into the
         // shingle lambda re-splits the doc once per shingle (q160 fix)
         .select(col("source"),
@@ -1076,17 +947,10 @@ object StreamingQueries {
         .select(col("source"), explode(array_distinct(
           graft.functions.TextAnalysis.shinglesOfTokens(col("_toks"), 4)))
           .as("gram"))
-      val q = StreamingPipeline.hllStatsStream(stream, "source", "gram",
-          p = 8, storeDir) { (res, batchId) =>
-          res.withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outDir.getPath)
-        }
-        .option("checkpointLocation", new File(work, "ckpt").getPath)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      StreamingPipeline.hllStatsStream(grams, "source", "gram", p = 8,
+        g.dir("store"))(g.append)
     }
-    s.read.parquet(outDir.getPath)
+    s.read.parquet(g.out)
       .select(col("batch_id"), col("source"), col("buckets_hit"),
         col("s_int"), col("hll_estimate"))
       .orderBy(col("batch_id"), col("source"))

@@ -1,10 +1,17 @@
 package graft.streaming
 
+import java.io.File
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.concurrent.Await
+import scala.concurrent.duration.DurationLong
+import scala.util.Try
+
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Structured Streaming surface (SURVEY §2.12 extension).
   *
@@ -26,8 +33,27 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * store keyed by (window, event_type); sessionize keys state by user_id —
   * state size is O(active users), and the event-time timeout evicts idle
   * users, so the state store never grows unboundedly.
+  *
+  * '''Eager consumption.''' Every `*Stream` entry point that takes an
+  * `onBatch` callback hands it a frame that is valid only INSIDE the
+  * callback: `onBatch` must consume it (write, collect, count) before it
+  * returns. The stateful operators run `onBatch` before they write the
+  * batch's state and compact or prune older state dirs, and the frame is
+  * not pinned; a deferred or repeated read after the callback races that
+  * state write and the source-dir deletes (a missing-file error, or a
+  * batch that re-reads its own new state and emits the wrong answer).
   */
 object StreamingPipeline {
+
+  /** The one micro-batch shell: creates `stateDirs`, then hands every
+    * micro-batch of `frame` to `body` in Append mode. The caller sets the
+    * checkpoint and trigger on the returned writer and starts it.
+    */
+  private[graft] def eachBatch(frame: DataFrame, stateDirs: String*)(
+      body: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
+    stateDirs.foreach(d => new File(d).mkdirs())
+    frame.writeStream.outputMode(OutputMode.Append).foreachBatch(body)
+  }
 
   /** File-source statement ingest: watch `dir` for new CSV drops with the
     * canonical unified schema, parse, and hand each micro-batch to the
@@ -35,19 +61,13 @@ object StreamingPipeline {
     * foreachBatch deployment of the batch refine stage).
     */
   def statementFileStream(spark: SparkSession, dir: String)(
-      onBatch: (DataFrame, Long) => Unit) = {
-    val raw = spark.readStream
+      onBatch: (DataFrame, Long) => Unit) =
+    eachBatch(spark.readStream
       .option("header", "true")
       .option("maxFilesPerTrigger", "16")
-      .schema(org.apache.spark.sql.types.StructType(
-        graft.etl.Schema.extractOrder.map(c =>
-          org.apache.spark.sql.types.StructField(c,
-            org.apache.spark.sql.types.StringType))))
-      .csv(dir)
-    raw.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch(onBatch)
-  }
+      .schema(StructType(graft.etl.Schema.extractOrder.map(c =>
+        StructField(c, StringType))))
+      .csv(dir))(onBatch)
 
   /** Watermarked tumbling-window count/sum per event type. `ts` must be a
     * timestamp column; late rows beyond the watermark are dropped (state
@@ -120,22 +140,19 @@ object StreamingPipeline {
     * UNBOUNDED history at ~32 bytes/doc in parquet — the right trade when
     * the dedup horizon is "everything ever ingested": 100 TB of documents
     * is ~tens of GB of digests, and the anti-join reads only the digest
-    * column.
+    * column. `onBatch` must consume its frame eagerly (see the note on
+    * [[StreamingPipeline]]).
     */
   def incrementalDedupStream(docs: DataFrame, idCol: String, textCol: String,
                              digestDir: String,
                              bucketMinStoreBytes: Long =
                                DigestBucketMinStoreBytes,
                              compactMinDirs: Int = DigestCompactMinDirs)(
-      onBatch: (DataFrame, Long) => Unit) = {
-    new java.io.File(digestDir).mkdirs()
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        incrementalDedupBatch(batch, batchId, idCol, textCol, digestDir,
-          bucketMinStoreBytes, compactMinDirs)(onBatch)
-      }
-  }
+      onBatch: (DataFrame, Long) => Unit) =
+    eachBatch(docs, digestDir) { (batch, batchId) =>
+      incrementalDedupBatch(batch, batchId, idCol, textCol, digestDir,
+        bucketMinStoreBytes, compactMinDirs)(onBatch)
+    }
 
   /** One micro-batch of [[incrementalDedupStream]] — replay-idempotent.
     *
@@ -193,44 +210,23 @@ object StreamingPipeline {
     * `FileSystem.getContentSummary` call — same O(files) namenode
     * metadata, still no job.)
     */
-  private def treeBytes(f: java.io.File): Long =
+  private def treeBytes(f: File): Long =
     if (f.isDirectory)
       Option(f.listFiles()).getOrElse(Array.empty).map(treeBytes).sum
     else f.length()
 
-  /** First long metric of an [[org.apache.spark.sql.Observation]], with a
-    * bounded wait and a fallback. Observation metrics ride the action that
-    * materializes the observed frame (zero extra Spark jobs — the r17
-    * single-materialization rework), but they are DELIVERED via the async
-    * listener bus, so they land a few ms after the action returns; poll
-    * briefly rather than `get()` (which would hang forever if the caller's
-    * `onBatch` never ran an action). The fallback recomputes the count as
-    * its own job — correctness never depends on the metric arriving.
+  /** The row count `obs` recorded on `onBatch`'s pass over the observed
+    * frame — zero extra Spark jobs when it arrives. Observation metrics
+    * arrive through the async listener bus a few ms after the action,
+    * so wait at most 2 s. An empty row (the optimizer pruned
+    * the CollectMetrics node) or a timeout (`onBatch` ran no action)
+    * falls back to `fallback`, its own job. A partial action (`take`,
+    * `limit`) completes the observation with an UNDERCOUNT, so the result
+    * may only steer a layout hint, never a state decision.
     */
-  private lazy val obsRowMethod: Option[java.lang.reflect.Method] =
-    // getRowOrEmpty is private[sql] at the Scala level but public in
-    // bytecode (plain reflection, no setAccessible); absent in some
-    // future Spark → fall back to the count job unconditionally
-    try Some(classOf[org.apache.spark.sql.Observation]
-      .getMethod("getRowOrEmpty"))
-    catch { case _: Throwable => None }
-
-  private def observedLong(obs: org.apache.spark.sql.Observation,
-                           deadlineMs: Long = 2000L)(
-      fallback: => Long): Long =
-    obsRowMethod.flatMap { m =>
-      // unset metrics surface as an EMPTY row (length 0), not None
-      def row = m.invoke(obs).asInstanceOf[Option[org.apache.spark.sql.Row]]
-        .filter(_.length > 0)
-      val t0 = System.nanoTime
-      val deadline = t0 + deadlineMs * 1000000L
-      var r = row // getRowOrEmpty itself waits up to ~100 ms when empty
-      while (r.isEmpty && System.nanoTime < deadline) r = row
-      if (sys.env.contains("GRAFT_STREAM_TIMING")) System.err.println(
-        f"[observedLong] waited ${(System.nanoTime - t0) / 1e6}%.1fms " +
-          s"fallback=${r.isEmpty}")
-      r.map(_.getLong(0))
-    }.getOrElse(fallback)
+  private def observedCount(obs: Observation)(fallback: => Long): Long =
+    Try(Await.result(obs.future, 2000L.millis)).toOption
+      .filter(_.length > 0).map(_.getLong(0)).getOrElse(fallback)
 
   private[graft] def incrementalDedupBatch(
       batch: DataFrame, batchId: Long, idCol: String, textCol: String,
@@ -239,8 +235,7 @@ object StreamingPipeline {
       compactMinDirs: Int = DigestCompactMinDirs)(
       onBatch: (DataFrame, Long) => Unit): Unit = {
     val s = batch.sparkSession
-    val seenDirs = batchDirsBefore(digestDir, "b", Long.MaxValue)
-      .filterNot(_.getName == f"b$batchId%05d")
+    val seenDirs = priorDirs(digestDir, batchId)
     // ADAPTIVE layout (the house adaptive-threshold pattern): bucket
     // only once the store is big enough that touched-bucket pruning
     // pays for its per-batch jobs. The decision is per-batch from the
@@ -248,17 +243,8 @@ object StreamingPipeline {
     // mid-stream and the mixed layout reads fine.
     val storeBytes = seenDirs.iterator.map(treeBytes).sum
     val bucketed = storeBytes >= bucketMinStoreBytes
-    // per-dir reads + union (not one multi-root read): batch subdirs mix
-    // layouts legitimately — pfx-bucketed (normal batches), flat (empty
-    // batches, pre-bucketing stores) — and multi-root partition
-    // discovery rejects the mix (CONFLICTING_DIRECTORY_STRUCTURES).
-    // Filters still push through the Union into every child scan.
-    val seen =
-      if (seenDirs.nonEmpty)
-        seenDirs.map(d => s.read.parquet(d.getPath))
-          .reduce(_.unionByName(_, allowMissingColumns = true))
-      else s.range(0).select(lit("").as("content_hash"),
-        lit("").as("pfx"))
+    val seen = unionDirs(s, seenDirs).getOrElse(
+      s.range(0).select(lit("").as("content_hash"), lit("").as("pfx")))
     // Bucket pruning: only store partitions whose digest prefix appears
     // in THIS batch can contain a match. The touched-prefix list is
     // model-scale (≤16 values, one tiny job over the small batch side),
@@ -286,13 +272,15 @@ object StreamingPipeline {
     // bought with an extra job per batch) — and the survivor count the
     // store-layout decision needs rides that same action's observed
     // metrics instead of its own job.
-    val obs = new org.apache.spark.sql.Observation()
+    val obs = new Observation()
     val kept = graft.operators.Curation
       .incrementalDedupDigestsMapSide(batch, pruned, idCol, textCol)
       .observe(obs, count(lit(1)).as("n"))
       .persist()
     onBatch(kept, batchId)
-    val nKept = observedLong(obs)(kept.count())
+    // a layout hint only: an undercount picks a narrower write of the
+    // same rows (the persisted kept serves the fallback count)
+    val nKept = observedCount(obs)(kept.count())
     // a PARTITIONED write of zero rows leaves a schemaless dir parquet
     // cannot re-read (the semDedupBatch lesson) — empty and
     // below-threshold batches write flat, with pfx as a DATA column so
@@ -345,22 +333,19 @@ object StreamingPipeline {
     * cell-confined quadratic the published design bounds by growing k
     * with the corpus — an unbalanced HOT cell is the thing to watch,
     * and [[graft.operators.Similarity.ivfCellStats]] over the store is
-    * the diagnostic.
+    * the diagnostic. `onBatch` must consume its frame eagerly (see the
+    * note on [[StreamingPipeline]]).
     */
   def semDedupStream(vecs: DataFrame, centroids: Seq[Seq[Double]],
                      threshold: Double, stateDir: String,
                      idCol: String = "vec_id",
                      vecCol: String = "embedding",
                      compactMinDirs: Int = DigestCompactMinDirs)(
-      onBatch: (DataFrame, Long) => Unit) = {
-    new java.io.File(stateDir).mkdirs()
-    vecs.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        semDedupBatch(batch, batchId, centroids, threshold, stateDir,
-          idCol, vecCol, compactMinDirs)(onBatch)
-      }
-  }
+      onBatch: (DataFrame, Long) => Unit) =
+    eachBatch(vecs, stateDir) { (batch, batchId) =>
+      semDedupBatch(batch, batchId, centroids, threshold, stateDir,
+        idCol, vecCol, compactMinDirs)(onBatch)
+    }
 
   /** One micro-batch of [[semDedupStream]] — replay-idempotent: the
     * state store is batchId-keyed (`b<batchId>` subdirs, cell-
@@ -374,12 +359,6 @@ object StreamingPipeline {
       compactMinDirs: Int = DigestCompactMinDirs)(
       onBatch: (DataFrame, Long) => Unit): Unit = {
     val s = batch.sparkSession
-    def tick(label: String, t0: Long): Long = {
-      if (sys.env.contains("GRAFT_STREAM_TIMING")) System.err.println(
-        f"[semDedupBatch b$batchId] $label ${(System.nanoTime - t0) / 1e9}%.2fs")
-      System.nanoTime
-    }
-    var t = System.nanoTime
     val assigned = graft.operators.Similarity
       .assignCells(batch, centroids, idCol, vecCol)
       .persist()
@@ -392,22 +371,14 @@ object StreamingPipeline {
       .agg(count(lit(1)).as("n")).collect()
     val nBatch = cellCounts.map(_.getLong(1)).sum
     val touched = cellCounts.map(_.getLong(0)).toSeq
-    t = tick("assign+touched", t)
-    val dirs = batchDirsBefore(stateDir, "b", Long.MaxValue)
-      .filterNot(_.getName == f"b$batchId%05d")
-    // one read per batch dir (multi-root partition discovery conflicts),
-    // unioned; the cell filter pushes through the union into each scan's
+    val dirs = priorDirs(stateDir, batchId)
+    // the cell filter pushes through the union into each scan's
     // partition pruning
-    val prior =
-      if (dirs.nonEmpty)
-        dirs.map(d => s.read.parquet(d.getPath))
-          .reduce(_.unionByName(_))
-          .filter(col("cell").isin(touched: _*))
-      else assigned.limit(0)
-    t = tick("prior", t)
+    val prior = unionDirs(s, dirs)
+      .map(_.filter(col("cell").isin(touched: _*)))
+      .getOrElse(assigned.limit(0))
     val result = graft.operators.Similarity
       .semDedupAgainst(prior, assigned, threshold)
-    t = tick("semdedup", t)
     // r17 single-materialization: onBatch is the batch's one pass over
     // the result (the gates write it to parquet). It runs BEFORE the
     // state write and compaction below, so the prior union it reads is
@@ -415,14 +386,12 @@ object StreamingPipeline {
     // bought with an extra job per batch. onBatch must consume eagerly:
     // a deferred read could race compaction's source-dir deletes.
     onBatch(result, batchId)
-    t = tick("onBatch", t)
     // an EMPTY batch must not write: a partitioned parquet write of zero
     // rows leaves a directory with no schema file, and every later
     // batch's store read dies on UNABLE_TO_INFER_SCHEMA
     if (nBatch > 0)
       assigned.write.mode("overwrite").partitionBy("cell")
         .parquet(f"$stateDir/b$batchId%05d")
-    t = tick("stateWrite", t)
     assigned.unpersist()
     // same auto-compaction cadence as the digest store: the per-batch
     // prior is a union over O(batches) subdirs, so a long-lived stream's
@@ -432,32 +401,22 @@ object StreamingPipeline {
     if (dirs.length + 1 >= compactMinDirs)
       compactStateDirs(s, stateDir, beforeId = batchId,
         partitionCols = Seq("cell"))
-    t = tick("compact", t)
     ()
   }
 
   /** The accumulated [[semDedupStream]] assignment store (all batches). */
   def semDedupStore(spark: SparkSession, stateDir: String)
-      : Option[DataFrame] = {
-    val dirs = batchDirsBefore(stateDir, "b", Long.MaxValue)
-    if (dirs.nonEmpty)
-      Some(dirs.map(d => spark.read.parquet(d.getPath))
-        .reduce(_.unionByName(_)))
-    else None
-  }
+      : Option[DataFrame] =
+    unionDirs(spark, batchDirsBefore(stateDir, "b", Long.MaxValue))
 
   /** The full digest store as one DataFrame (union of all batch subdirs).
     * The `pfx` bucket column is a LAYOUT detail — consumers see only the
     * digest column.
     */
-  def digestStore(spark: SparkSession, digestDir: String): DataFrame = {
-    val dirs = batchDirsBefore(digestDir, "b", Long.MaxValue)
-    if (dirs.nonEmpty)
-      dirs.map(d => spark.read.parquet(d.getPath))
-        .reduce(_.unionByName(_, allowMissingColumns = true))
-        .select("content_hash")
-    else spark.range(0).select(lit("").as("content_hash"))
-  }
+  def digestStore(spark: SparkSession, digestDir: String): DataFrame =
+    unionDirs(spark, batchDirsBefore(digestDir, "b", Long.MaxValue))
+      .map(_.select("content_hash"))
+      .getOrElse(spark.range(0).select(lit("").as("content_hash")))
 
   /** Compacts the batchId-keyed subdirs of an APPEND-history state
     * store ([[incrementalDedupStream]]'s digest store,
@@ -506,7 +465,7 @@ object StreamingPipeline {
     // deletes the target before the write commits, so a crash mid-merge
     // lost that dir's rows.
     val lastId = dirId(dirs.last)
-    val target = new java.io.File(dir, f"c$lastId%05d")
+    val target = new File(dir, f"c$lastId%05d")
     if (dirs.last.getName == target.getName) {
       // replay of a completed compaction (the rename landed; a crash
       // then left some sources behind): everything with id <= lastId is
@@ -521,8 +480,7 @@ object StreamingPipeline {
             .filter(f => f.isDirectory && f.getName.contains("="))
             .map(_.getName.takeWhile(_ != '=')))
         .distinct.toSeq
-    val merged = dirs.map(d => spark.read.parquet(d.getPath))
-      .reduce(_.unionByName(_, allowMissingColumns = true))
+    val merged = unionDirs(spark, dirs).get
       .persist() // one source read feeds both the count and the write
     val nRows = merged.count()
     // zero rows → write FLAT even if the sources were partitioned (a
@@ -533,7 +491,7 @@ object StreamingPipeline {
       if (layout.nonEmpty && nRows > 0)
         merged.repartition(layout.map(col): _*)
       else merged
-    val scratch = new java.io.File(dir, f"t$lastId%05d")
+    val scratch = new File(dir, f"t$lastId%05d")
     deleteRecursively(scratch) // stale scratch from a crashed attempt
     val writer = toWrite.write.mode("overwrite")
     (if (layout.nonEmpty && nRows > 0) writer.partitionBy(layout: _*)
@@ -545,10 +503,10 @@ object StreamingPipeline {
     dirs.length - 1
   }
 
-  private def dirId(f: java.io.File): Long =
+  private def dirId(f: File): Long =
     f.getName.dropWhile(!_.isDigit).toLong
 
-  private def deleteRecursively(f: java.io.File): Unit = {
+  private def deleteRecursively(f: File): Unit = {
     Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
     f.delete()
     ()
@@ -564,9 +522,9 @@ object StreamingPipeline {
     * replay branch of compactStateDirs, never a rename collision.
     */
   private def batchDirsBefore(dir: String, prefix: String, beforeId: Long)
-      : Array[java.io.File] = {
+      : Array[File] = {
     val prefixes = if (prefix == "b") Seq("b", "c") else Seq(prefix)
-    Option(new java.io.File(dir).listFiles())
+    Option(new File(dir).listFiles())
       .getOrElse(Array.empty)
       .filter { f =>
         f.isDirectory && prefixes.exists { p =>
@@ -576,8 +534,57 @@ object StreamingPipeline {
             f.getName.stripPrefix(p).toLong < beforeId
         }
       }
-      .sortBy(f => (f.getName.dropWhile(!_.isDigit).toLong, f.getName))
+      .sortBy(f => (dirId(f), f.getName))
   }
+
+  /** The prior state of an APPEND-history store (digest, semDedup,
+    * MinHash, domain-pair stores) for `batchId`: every `b`/`c` subdir
+    * except the batch's own `b<batchId>`, so a replay probes exactly the
+    * store its first attempt probed and then overwrites its own subdir.
+    */
+  private def priorDirs(dir: String, batchId: Long): Array[File] =
+    batchDirsBefore(dir, "b", Long.MaxValue)
+      .filterNot(_.getName == f"b$batchId%05d")
+
+  /** Store subdirs read one by one and unioned by name, or None when
+    * there are none. Not one multi-root read: subdirs mix layouts
+    * legitimately (pfx-bucketed and flat digest batches, compacted
+    * dirs) and multi-root partition discovery rejects the mix
+    * (CONFLICTING_DIRECTORY_STRUCTURES). Filters still push through the
+    * Union into every child scan.
+    */
+  private def unionDirs(s: SparkSession, dirs: Array[File])
+      : Option[DataFrame] =
+    dirs.map(d => s.read.parquet(d.getPath))
+      .reduceOption(_.unionByName(_, allowMissingColumns = true))
+
+  /** The state a VERSIONED store (one `v<batchId>` dir per writing
+    * batch) hands `batchId`: its latest version strictly below the batch,
+    * in numeric order. Reading strictly below is the replay recipe: a
+    * crash between the `v<batchId>` write and the checkpoint commit
+    * replays the batch, which must not merge into its own half-committed
+    * output.
+    */
+  private def versionBelow(dir: String, batchId: Long): Option[File] =
+    batchDirsBefore(dir, "v", batchId).lastOption
+
+  /** Retention for a versioned store once a batch has written
+    * `v<batchId>` on top of `prior`: keep {prior, new} and delete every
+    * older version. The prior must survive — only the current batch can
+    * replay, and its strictly-below lookup reads exactly that version.
+    */
+  private def pruneBelow(dir: String, prior: Option[File]): Unit =
+    prior.foreach(p =>
+      batchDirsBefore(dir, "v", dirId(p)).foreach(deleteRecursively))
+
+  /** The latest committed version of a versioned store — the
+    * [[upsertStream]] snapshot, the [[unigramCeStream]] LM, the
+    * [[decontamStream]] benchmark snapshot, and the mixture, HLL and
+    * Bloom stores — if any. Versions compare by number, so `v100000`
+    * follows `v99999`.
+    */
+  def latestVersion(spark: SparkSession, dir: String): Option[DataFrame] =
+    versionBelow(dir, Long.MaxValue).map(f => spark.read.parquet(f.getPath))
 
   /** Per-micro-batch benchmark contamination (q79 semantics): the
     * benchmark gram set is static and broadcast, each batch probes it
@@ -587,12 +594,10 @@ object StreamingPipeline {
   def contaminationStream(docs: DataFrame, bench: DataFrame, idCol: String,
                           textCol: String, n: Int, flagThreshold: Double)(
       onBatch: (DataFrame, Long) => Unit) =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        onBatch(graft.operators.Curation.contaminationReport(
-          batch, bench, idCol, textCol, n, flagThreshold), batchId)
-      }
+    eachBatch(docs) { (batch, batchId) =>
+      onBatch(graft.operators.Curation.contaminationReport(
+        batch, bench, idCol, textCol, n, flagThreshold), batchId)
+    }
 
   /** Streaming mixture maintenance: keep a running per-source (docs,
     * tokens) inventory across micro-batches and re-emit the mixture plan
@@ -601,20 +606,17 @@ object StreamingPipeline {
     * however much streams through); each batch adds its own partial
     * aggregate — the arithmetic is exact longs, so the running plan is
     * IDENTICAL to the batch plan over everything seen so far
-    * (StreamingSpec asserts it).
+    * (StreamingSpec asserts it). `onBatch` must consume its frame eagerly
+    * (see the note on [[StreamingPipeline]]).
     */
   def mixturePlanStream(docs: DataFrame, sourceCol: String,
                         tokenCount: org.apache.spark.sql.Column,
                         stateDir: String)(
-      onBatch: (DataFrame, Long) => Unit) = {
-    new java.io.File(stateDir).mkdirs()
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mixturePlanBatch(batch, batchId, sourceCol, tokenCount, stateDir)(
-          onBatch)
-      }
-  }
+      onBatch: (DataFrame, Long) => Unit) =
+    eachBatch(docs, stateDir) { (batch, batchId) =>
+      mixturePlanBatch(batch, batchId, sourceCol, tokenCount, stateDir)(
+        onBatch)
+    }
 
   /** One micro-batch of [[mixturePlanStream]] — replay-idempotent.
     *
@@ -643,22 +645,19 @@ object StreamingPipeline {
     * stream's lifetime; the emitted plan over everything seen so far is
     * IDENTICAL to the batch q100 plan on the same rows (StreamingSpec
     * asserts it — the inventory arithmetic is exact, and the tempered
-    * shares are a pure function of the inventory).
+    * shares are a pure function of the inventory). `onBatch` must consume
+    * its frame eagerly (see the note on [[StreamingPipeline]]).
     */
   def mixturePlanTemperatureStream(docs: DataFrame, sourceCol: String,
                                    tokenCount: org.apache.spark.sql.Column,
                                    stateDir: String, alpha: Double = 0.5)(
-      onBatch: (DataFrame, Long) => Unit) = {
-    new java.io.File(stateDir).mkdirs()
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mixtureUpkeepBatch(batch, batchId, sourceCol, tokenCount, stateDir,
-          inv => graft.operators.Curation
-            .mixturePlanTemperatureFromInventory(inv, sourceCol, alpha))(
-          onBatch)
-      }
-  }
+      onBatch: (DataFrame, Long) => Unit) =
+    eachBatch(docs, stateDir) { (batch, batchId) =>
+      mixtureUpkeepBatch(batch, batchId, sourceCol, tokenCount, stateDir,
+        inv => graft.operators.Curation
+          .mixturePlanTemperatureFromInventory(inv, sourceCol, alpha))(
+        onBatch)
+    }
 
   /** Shared micro-batch body of the mixture-upkeep streams: merge the
     * batch's per-source partial aggregate into the replay-safe versioned
@@ -673,7 +672,7 @@ object StreamingPipeline {
     val batchAgg = batch.groupBy(col(sourceCol))
       .agg(count(lit(1)).as("n_docs"),
         sum(tokenCount.cast("long")).as("n_tokens"))
-    val prevOpt = batchDirsBefore(stateDir, "v", batchId).lastOption
+    val prevOpt = versionBelow(stateDir, batchId)
       .map(f => s.read.parquet(f.getPath))
     val merged = (prevOpt match {
       case Some(prev) =>
@@ -702,18 +701,15 @@ object StreamingPipeline {
     * ([[graft.operators.Curation.unigramLmMerge]] — exact-long counts,
     * so the maintained snapshot equals `unigramLm` over the
     * concatenated history). State is VOCAB-sized (Heaps-sublinear),
-    * never corpus-sized; one (term) shuffle per batch.
+    * never corpus-sized; one (term) shuffle per batch. `onBatch` must
+    * consume its frame eagerly (see the note on [[StreamingPipeline]]).
     */
   def unigramCeStream(docs: DataFrame, idCol: String, textCol: String,
                       lmDir: String, addK: Double = 1.0)(
-      onBatch: (DataFrame, Long) => Unit) = {
-    new java.io.File(lmDir).mkdirs()
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        unigramCeBatch(batch, batchId, idCol, textCol, lmDir, addK)(onBatch)
-      }
-  }
+      onBatch: (DataFrame, Long) => Unit) =
+    eachBatch(docs, lmDir) { (batch, batchId) =>
+      unigramCeBatch(batch, batchId, idCol, textCol, lmDir, addK)(onBatch)
+    }
 
   /** One micro-batch of [[unigramCeStream]] — replay-idempotent: scores
     * against (and merges onto) the latest LM version STRICTLY BELOW the
@@ -726,7 +722,7 @@ object StreamingPipeline {
       lmDir: String, addK: Double)(
       onBatch: (DataFrame, Long) => Unit): Unit = {
     val s = batch.sparkSession
-    val prior = batchDirsBefore(lmDir, "v", batchId).lastOption
+    val prior = versionBelow(lmDir, batchId)
       .map(f => s.read.parquet(f.getPath))
       .getOrElse(s.range(0).select(lit("").as("term"), lit(0L).as("cf")))
     // ONE tokenization per batch: the tf rollup feeds both the scorer
@@ -746,12 +742,6 @@ object StreamingPipeline {
     tf.unpersist()
     ()
   }
-
-  /** The latest maintained LM snapshot under `lmDir`, if any. */
-  def unigramLmSnapshot(spark: SparkSession, lmDir: String)
-      : Option[DataFrame] =
-    batchDirsBefore(lmDir, "v", Long.MaxValue).lastOption
-      .map(f => spark.read.parquet(f.getPath))
 
   /** Streaming semantic decontamination — the q150 frozen-snapshot
     * surface in the [[unigramCeStream]] loop shape. One stream carries
@@ -774,21 +764,18 @@ object StreamingPipeline {
     * survive: a crash can replay only the current batch, whose
     * strictly-below lookup reads exactly that version. So the store
     * holds at most two snapshot copies at any time instead of one per
-    * micro-batch.
+    * micro-batch. `onBatch` must consume its frame eagerly (see the note
+    * on [[StreamingPipeline]]).
     */
   def decontamStream(vecs: DataFrame, benchFlagCol: String,
                      centroids: Seq[Seq[Double]], threshold: Double,
                      snapDir: String, idCol: String = "vec_id",
                      vecCol: String = "embedding")(
-      onBatch: (DataFrame, Long) => Unit) = {
-    new java.io.File(snapDir).mkdirs()
-    vecs.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        decontamBatch(batch, batchId, benchFlagCol, centroids, threshold,
-          snapDir, idCol, vecCol)(onBatch)
-      }
-  }
+      onBatch: (DataFrame, Long) => Unit) =
+    eachBatch(vecs, snapDir) { (batch, batchId) =>
+      decontamBatch(batch, batchId, benchFlagCol, centroids, threshold,
+        snapDir, idCol, vecCol)(onBatch)
+    }
 
   /** One micro-batch of [[decontamStream]]. */
   private[graft] def decontamBatch(
@@ -797,57 +784,35 @@ object StreamingPipeline {
       idCol: String, vecCol: String)(
       onBatch: (DataFrame, Long) => Unit): Unit = {
     val s = batch.sparkSession
-    val priorDir = batchDirsBefore(snapDir, "v", batchId).lastOption
-    val prior = priorDir.map(f => s.read.parquet(f.getPath))
+    val priorDir = versionBelow(snapDir, batchId)
     // before any benchmark arrives, the snapshot is EMPTY (nothing to
     // be contaminated by) — same schema, zero rows
-    val snap = prior.getOrElse(graft.operators.Similarity
-      .benchmarkSnapshot(batch.filter(lit(false)), centroids, idCol,
-        vecCol))
+    val snap = priorDir.map(f => s.read.parquet(f.getPath))
+      .getOrElse(graft.operators.Similarity.benchmarkSnapshot(
+        batch.filter(lit(false)), centroids, idCol, vecCol))
     // r17 single-materialization: onBatch is the batch's one pass over
     // the scores (it runs before the snapshot write, so it reads the
     // prior snapshot — the pin the old persist+count bought with an
-    // extra job), and the benchmark-row count rides that same action's
-    // observed metrics: the CollectMetrics node sits BELOW the train
-    // filter, so it sees every batch row — no separate isEmpty() probe.
-    val obs = new org.apache.spark.sql.Observation()
-    val observed = batch.observe(obs,
-      count(when(col(benchFlagCol), lit(1))).as("nb"))
-    val scored = graft.operators.Similarity.semanticContaminationAgainst(
-        observed.filter(!col(benchFlagCol)), snap, centroids, threshold,
-        idCol, vecCol)
-    onBatch(scored, batchId)
-    // empty-prior batches (before any benchmark arrived) collapse the
-    // scoring join to an empty relation at optimization time, PRUNING the
-    // CollectMetrics node — the observation would never complete; probe
-    // directly instead of burning the poll deadline
-    val nBench =
-      if (priorDir.isEmpty)
-        (if (batch.filter(col(benchFlagCol)).isEmpty) 0L else 1L)
-      else observedLong(obs)(batch.filter(col(benchFlagCol)).count())
+    // extra job)
+    onBatch(graft.operators.Similarity.semanticContaminationAgainst(
+        batch.filter(!col(benchFlagCol)), snap, centroids, threshold,
+        idCol, vecCol), batchId)
     // a train-only batch (the common case) leaves the store untouched —
-    // no O(snapshot) rewrite per micro-batch
-    if (nBench > 0) {
+    // no O(snapshot) rewrite per micro-batch. The engine answers the
+    // probe itself: a metric of onBatch's own action would undercount
+    // whenever that action stops early (take, limit, isEmpty), and this
+    // decision is a PERMANENT store write.
+    if (!batch.filter(col(benchFlagCol)).isEmpty) {
       // benchmark rows are immutable per id, so the replay-dedup keeps
       // content-identical rows whichever copy survives
       val newBench = graft.operators.Similarity.benchmarkSnapshot(
         batch.filter(col(benchFlagCol)), centroids, idCol, vecCol)
       snap.unionByName(newBench).dropDuplicates("bench_id")
         .write.mode("overwrite").parquet(f"$snapDir/v$batchId%05d")
-      // retention: keep {prior, new}; only the current batch can
-      // replay, and its strictly-below lookup reads the prior — every
-      // older version is dead
-      priorDir.foreach(p => batchDirsBefore(snapDir, "v", dirId(p))
-        .foreach(deleteRecursively))
+      pruneBelow(snapDir, priorDir)
     }
     ()
   }
-
-  /** The latest maintained benchmark snapshot under `snapDir`, if any. */
-  def decontamSnapshot(spark: SparkSession, snapDir: String)
-      : Option[DataFrame] =
-    batchDirsBefore(snapDir, "v", Long.MaxValue).lastOption
-      .map(f => spark.read.parquet(f.getPath))
 
   /** Streaming BROADCAST-BLOOM n-gram decontamination — the q159
     * map-only surface in the [[decontamStream]] loop shape. One stream
@@ -866,6 +831,8 @@ object StreamingPipeline {
     * [[decontamBatch]]: strictly-below lookup + versioned overwrite
     * (at-least-once redelivery re-emits identical scores), train-only
     * batches write nothing, and a writing batch prunes to {prior, new}.
+    * `onBatch` must consume its frame eagerly (see the note on
+    * [[StreamingPipeline]]).
     */
   def bloomDecontamStream(docs: DataFrame, benchFlagCol: String,
                           storeDir: String, n: Int = 4,
@@ -873,15 +840,11 @@ object StreamingPipeline {
                           flagThreshold: Double = 0.05,
                           idCol: String = "doc_id",
                           textCol: String = "text")(
-      onBatch: (DataFrame, Long) => Unit) = {
-    new java.io.File(storeDir).mkdirs()
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        bloomDecontamBatch(batch, batchId, benchFlagCol, storeDir,
-          n, mBits, k, flagThreshold, idCol, textCol)(onBatch)
-      }
-  }
+      onBatch: (DataFrame, Long) => Unit) =
+    eachBatch(docs, storeDir) { (batch, batchId) =>
+      bloomDecontamBatch(batch, batchId, benchFlagCol, storeDir,
+        n, mBits, k, flagThreshold, idCol, textCol)(onBatch)
+    }
 
   /** Streaming incremental corpus statistics — the q160 deterministic
     * HLL in the loop shape: each micro-batch's `(group, value)` rows
@@ -894,19 +857,16 @@ object StreamingPipeline {
     * writes (stats always move), pruning to {prior, new}. Replay is
     * idempotent: the prior lookup is strictly below batchId, so a
     * redelivered batch re-merges the same inputs into the same store
-    * and re-emits the same estimates.
+    * and re-emits the same estimates. `onBatch` must consume its frame
+    * eagerly (see the note on [[StreamingPipeline]]).
     */
   def hllStatsStream(rows: DataFrame, groupCol: String, valueCol: String,
                      p: Int, storeDir: String)(
-      onBatch: (DataFrame, Long) => Unit) = {
-    new java.io.File(storeDir).mkdirs()
-    rows.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        hllStatsBatch(batch, batchId, groupCol, valueCol, p, storeDir)(
-          onBatch)
-      }
-  }
+      onBatch: (DataFrame, Long) => Unit) =
+    eachBatch(rows, storeDir) { (batch, batchId) =>
+      hllStatsBatch(batch, batchId, groupCol, valueCol, p, storeDir)(
+        onBatch)
+    }
 
   /** One micro-batch of [[hllStatsStream]]. */
   private[graft] def hllStatsBatch(
@@ -914,7 +874,7 @@ object StreamingPipeline {
       p: Int, storeDir: String)(
       onBatch: (DataFrame, Long) => Unit): Unit = {
     val s = batch.sparkSession
-    val priorDir = batchDirsBefore(storeDir, "v", batchId).lastOption
+    val priorDir = versionBelow(storeDir, batchId)
     val batchRegs = graft.operators.Sketches.hllRegisters(
       batch, Seq(groupCol), valueCol, p)
     val merged = (priorDir.map(f => s.read.parquet(f.getPath)) match {
@@ -926,8 +886,7 @@ object StreamingPipeline {
     onBatch(graft.operators.Sketches.hllEstimateFromRegisters(
       merged, Seq(groupCol), p), batchId)
     merged.write.mode("overwrite").parquet(f"$storeDir/v$batchId%05d")
-    priorDir.foreach(pd => batchDirsBefore(storeDir, "v", dirId(pd))
-      .foreach(deleteRecursively))
+    pruneBelow(storeDir, priorDir)
     merged.unpersist()
     ()
   }
@@ -939,7 +898,7 @@ object StreamingPipeline {
       flagThreshold: Double, idCol: String, textCol: String)(
       onBatch: (DataFrame, Long) => Unit): Unit = {
     val s = batch.sparkSession
-    val priorDir = batchDirsBefore(storeDir, "v", batchId).lastOption
+    val priorDir = versionBelow(storeDir, batchId)
     val priorWords = priorDir.map(f => s.read.parquet(f.getPath))
     // before any benchmark arrives the filter is EMPTY: zero bits set,
     // every probe reports zero hits
@@ -948,19 +907,14 @@ object StreamingPipeline {
         .map(r => (r.getInt(0), r.getLong(1)))).getOrElse(Seq.empty),
       mBits)
     // r17 single-materialization (the decontamBatch recipe): onBatch is
-    // the one pass over the prior-filter scores, and the benchmark-row
-    // count rides its observed metrics (CollectMetrics below the train
-    // filter sees every batch row) — no separate count or isEmpty jobs.
-    val obs = new org.apache.spark.sql.Observation()
-    val observed = batch.observe(obs,
-      count(when(col(benchFlagCol), lit(1))).as("nb"))
-    val scored = graft.operators.Curation.bloomProbeReport(
-        observed.filter(!col(benchFlagCol)), bits, idCol, textCol,
-        n, mBits, k, flagThreshold)
-    onBatch(scored, batchId)
-    val nBench = observedLong(obs)(
-      batch.filter(col(benchFlagCol)).count())
-    if (nBench > 0) {
+    // the one pass over the prior-filter scores
+    onBatch(graft.operators.Curation.bloomProbeReport(
+        batch.filter(!col(benchFlagCol)), bits, idCol, textCol,
+        n, mBits, k, flagThreshold), batchId)
+    // the store write is permanent, so the engine decides it (the
+    // decontamBatch rule): the probe is a map-only projection, and a
+    // partial onBatch action would see only its first partitions
+    if (!batch.filter(col(benchFlagCol)).isEmpty) {
       val newWords = graft.operators.Curation.bloomWordRows(
         batch.filter(col(benchFlagCol)), textCol, n, mBits, k)
       val merged = priorWords match {
@@ -969,8 +923,7 @@ object StreamingPipeline {
         case None => newWords
       }
       merged.write.mode("overwrite").parquet(f"$storeDir/v$batchId%05d")
-      priorDir.foreach(p => batchDirsBefore(storeDir, "v", dirId(p))
-        .foreach(deleteRecursively))
+      pruneBelow(storeDir, priorDir)
     }
     ()
   }
@@ -984,36 +937,21 @@ object StreamingPipeline {
     * in a real deployment, and partition-overwrite bounds the rewrite).
     */
   def upsertStream(delta: DataFrame, keys: Seq[String], versionCol: String,
-                   snapshotDir: String) = {
-    new java.io.File(snapshotDir).mkdirs()
-    delta.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        // replay safety: merge against the last version committed by a
-        // PREVIOUS batch, never the replaying batch's own output (see
-        // mixturePlanBatch for the failure mode).
-        val merged = batchDirsBefore(snapshotDir, "v", batchId)
-          .lastOption match {
-          case Some(prev) =>
-            graft.operators.Snapshot.mergeSnapshot(
-              s.read.parquet(prev.getPath), batch, keys, versionCol)
-          case None =>
-            graft.operators.Snapshot.keepLatest(batch, keys, versionCol)
-        }
-        merged.write.mode("overwrite")
-          .parquet(f"$snapshotDir/v$batchId%05d")
+                   snapshotDir: String) =
+    eachBatch(delta, snapshotDir) { (batch, batchId) =>
+      // replay safety: merge against the last version committed by a
+      // PREVIOUS batch, never the replaying batch's own output
+      val merged = versionBelow(snapshotDir, batchId) match {
+        case Some(prev) =>
+          graft.operators.Snapshot.mergeSnapshot(
+            batch.sparkSession.read.parquet(prev.getPath), batch, keys,
+            versionCol)
+        case None =>
+          graft.operators.Snapshot.keepLatest(batch, keys, versionCol)
       }
-  }
-
-  /** Latest committed snapshot version under `snapshotDir`, if any. */
-  def latestSnapshot(spark: SparkSession, snapshotDir: String)
-      : Option[DataFrame] =
-    Option(new java.io.File(snapshotDir).listFiles())
-      .getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("v"))
-      .sortBy(_.getName).lastOption
-      .map(f => spark.read.parquet(f.getPath))
+      merged.write.mode("overwrite")
+        .parquet(f"$snapshotDir/v$batchId%05d")
+    }
 
   /** Input row for the streaming samplers: a document's stratum, id, and
     * (for the weighted variant) sampling weight.
@@ -1231,19 +1169,34 @@ object StreamingPipeline {
     * (bands × rows-per-band trade; the q26 gate corpus measures 1.0 at
     * 32×2, and the oracle is the exact-Jaccard replay, so any recall
     * loss fails the gate loudly).
+    *
+    * State written by the older two-store layout (`bands/` and
+    * `shingles/` batch subdirs, no `store/` batches) is refused with an
+    * IllegalStateException naming the dirs: this operator cannot read
+    * it, and starting over it would silently re-admit every earlier
+    * document. `onBatch` must consume its frame eagerly (see the note on
+    * [[StreamingPipeline]]).
     */
   def minHashDedupStream(docs: DataFrame, idCol: String, textCol: String,
                          stateDir: String, n: Int = 3,
                          threshold: Double = 0.4, numHashes: Int = 64,
                          bands: Int = 32)(
       onBatch: (DataFrame, Long) => Unit) = {
-    new java.io.File(stateDir, "store").mkdirs()
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        minHashDedupBatch(batch, batchId, idCol, textCol, stateDir, n,
-          threshold, numHashes, bands)(onBatch)
-      }
+    val storeDir = s"$stateDir/store"
+    val legacy = Seq("bands", "shingles").map(d => s"$stateDir/$d")
+      .filter(d => batchDirsBefore(d, "b", Long.MaxValue).nonEmpty)
+    if (legacy.nonEmpty &&
+        batchDirsBefore(storeDir, "b", Long.MaxValue).isEmpty)
+      throw new IllegalStateException(
+        s"minHashDedupStream: ${legacy.mkString(", ")} hold MinHash state " +
+          s"in the old two-store layout and $storeDir holds none; this " +
+          "operator reads only store/, so it would re-admit every earlier " +
+          "document. Migrate that state into store/ or start from an " +
+          "empty state dir.")
+    eachBatch(docs, storeDir) { (batch, batchId) =>
+      minHashDedupBatch(batch, batchId, idCol, textCol, stateDir, n,
+        threshold, numHashes, bands)(onBatch)
+    }
   }
 
   private[graft] def minHashDedupBatch(
@@ -1280,17 +1233,12 @@ object StreamingPipeline {
         explode(col("bands")).as("bb"))
       .select(col("id"), col("shingles"),
         col("bb.band").as("band"), col("bb.bh").as("bh"))
-    val priorWide = {
-      val dirs = batchDirsBefore(storeDir, "b", Long.MaxValue)
-        .filterNot(_.getName == f"b$batchId%05d")
-      if (dirs.nonEmpty)
-        dirs.map(d => s.read.parquet(d.getPath))
-          .reduce(_.unionByName(_, allowMissingColumns = true))
-      else s.range(0).select(lit(0L).as("id"),
+    val dirs = priorDirs(storeDir, batchId)
+    val priorWide = unionDirs(s, dirs).getOrElse(
+      s.range(0).select(lit(0L).as("id"),
         lit(Array.empty[Long]).as("shingles"),
         expr("CAST(array() AS array<struct<band: int, bh: bigint>>)")
-          .as("bands"))
-    }
+          .as("bands")))
     val priorBands = priorWide
       .select(col("id"), explode(col("bands")).as("bb"))
       .select(col("bb.band").as("band"), col("bb.bh").as("bh"), col("id"))
@@ -1341,8 +1289,7 @@ object StreamingPipeline {
     onBatch(emission, batchId)
     curWide.coalesce(1).write.mode("overwrite")
       .parquet(f"$storeDir/b$batchId%05d")
-    if (batchDirsBefore(storeDir, "b", Long.MaxValue).length >=
-        DigestCompactMinDirs)
+    if (dirs.length + 1 >= DigestCompactMinDirs)
       compactStateDirs(s, storeDir, beforeId = batchId)
     ()
   }
@@ -1379,23 +1326,20 @@ object StreamingPipeline {
     * whole-store aggregation). Replay-idempotent: the pairs store keys
     * its subdirs by batchId and overwrites on replay (auto-compacting
     * like the digest store); the counter store replays by the
-    * strictly-below version lookup.
+    * strictly-below version lookup. `onBatch` must consume its frame
+    * eagerly (see the note on [[StreamingPipeline]]).
     */
   def domainQualityStream(docs: DataFrame, urlCol: String, idCol: String,
                           keepCol: String, wordsCol: String,
                           stateDir: String,
                           psl: Seq[graft.operators.WebCuration.PslRule] =
                             graft.operators.WebCuration.defaultPsl)(
-      onBatch: (DataFrame, Long) => Unit) = {
-    new java.io.File(stateDir, "pairs").mkdirs()
-    new java.io.File(stateDir, "counters").mkdirs()
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      onBatch: (DataFrame, Long) => Unit) =
+    eachBatch(docs, s"$stateDir/pairs", s"$stateDir/counters") {
+      (batch, batchId) =>
         domainQualityBatch(batch, batchId, urlCol, idCol, keepCol,
           wordsCol, stateDir, psl)(onBatch)
-      }
-  }
+    }
 
   private[graft] def domainQualityBatch(
       batch: DataFrame, batchId: Long, urlCol: String, idCol: String,
@@ -1427,13 +1371,9 @@ object StreamingPipeline {
         md5(concat_ws("\u0000", col("domain"), col("c")))
           .as("content_hash"))
       .distinct()
-    val seenDirs = batchDirsBefore(pairDir, "b", Long.MaxValue)
-      .filterNot(_.getName == f"b$batchId%05d")
-    val seen =
-      if (seenDirs.nonEmpty)
-        seenDirs.map(d => s.read.parquet(d.getPath))
-          .reduce(_.unionByName(_, allowMissingColumns = true))
-      else s.range(0).select(lit("").as("content_hash"))
+    val seenDirs = priorDirs(pairDir, batchId)
+    val seen = unionDirs(s, seenDirs)
+      .getOrElse(s.range(0).select(lit("").as("content_hash")))
     // no distinct (r17): the anti-join below tolerates duplicate build
     // keys — store-side duplicates (compaction window) change nothing
     val matched = seen.select("content_hash")
@@ -1461,9 +1401,8 @@ object StreamingPipeline {
     // associative, so the running totals (and every rate derived from
     // them) are bit-identical to the old whole-store aggregation.
     // Replay-idempotent by the strictly-below argument; a writing batch
-    // prunes to {prior, new} (the prior must survive — only the current
-    // batch can replay, and it reads exactly that version).
-    val prevCtr = batchDirsBefore(ctrDir, "v", batchId).lastOption
+    // prunes to {prior, new}.
+    val prevCtr = versionBelow(ctrDir, batchId)
     val merged = (prevCtr.map(f => s.read.parquet(f.getPath)) match {
       case Some(prev) => prev.unionByName(counters)
         .groupBy(col("domain"))
@@ -1491,14 +1430,11 @@ object StreamingPipeline {
       .withColumn("block_score",
         round((col("dup_rate") + (lit(1d) - col("keep_rate"))) / 2d, 6))
     onBatch(rollup, batchId)
-    // retention: keep {prior, new} (a replay of THIS batch reads the
-    // prior); prune AFTER onBatch so a cache miss on the rollup read can
-    // still recompute merged from the prior version
-    prevCtr.foreach(p => batchDirsBefore(ctrDir, "v", dirId(p))
-      .foreach(deleteRecursively))
+    // prune AFTER onBatch so a cache miss on the rollup read can still
+    // recompute merged from the prior version
+    pruneBelow(ctrDir, prevCtr)
     merged.unpersist()
-    if (batchDirsBefore(pairDir, "b", Long.MaxValue).length >=
-        DigestCompactMinDirs)
+    if (seenDirs.length + 1 >= DigestCompactMinDirs)
       compactStateDirs(s, pairDir, beforeId = batchId)
     ()
   }

@@ -436,7 +436,7 @@ class StreamingSpec extends SparkSpec {
     assert(perBatch(1L) == want1 && want1.map(_._1) == Seq(2L),
       s"got ${perBatch(1L)}, want $want1")
     // the maintained snapshot covers every benchmark row seen
-    val snap = StreamingPipeline.decontamSnapshot(spark, snapDir).get
+    val snap = StreamingPipeline.latestVersion(spark, snapDir).get
       .select("bench_id").as[Long].collect().toSet
     assert(snap == Set(100L, 101L))
     def versionDirs = new java.io.File(snapDir).listFiles()
@@ -455,7 +455,7 @@ class StreamingSpec extends SparkSpec {
         .as[(Long, Long)].collect().toSeq.sortBy(_._1)
     }
     assert(replay == perBatch(1L).map(r => (r._1, r._3)))
-    assert(StreamingPipeline.decontamSnapshot(spark, snapDir).get
+    assert(StreamingPipeline.latestVersion(spark, snapDir).get
       .select("bench_id").as[Long].collect().toSet == Set(100L, 101L))
     // benchmark-carrying batches write a new version and prune to
     // {prior, new}: after batch 2 the store is {v00000, v00002}; after
@@ -471,7 +471,7 @@ class StreamingSpec extends SparkSpec {
       cents, 0.9, snapDir, "vec_id", "embedding") { (_, _) => () }
     assert(versionDirs == Seq("v00002", "v00003"),
       s"retention must keep {prior, new}: $versionDirs")
-    assert(StreamingPipeline.decontamSnapshot(spark, snapDir).get
+    assert(StreamingPipeline.latestVersion(spark, snapDir).get
       .select("bench_id").as[Long].collect().toSet ==
       Set(100L, 101L, 102L, 103L),
       "pruning must never lose benchmark rows")
@@ -990,7 +990,7 @@ class StreamingSpec extends SparkSpec {
       .as[(Long, Int, Long, Long, Long, Double)].collect().toSeq.sortBy(_._1)
     assert(perBatch(1L) == want1)
     // the maintained snapshot equals unigramLm over the full history
-    val snap = StreamingPipeline.unigramLmSnapshot(spark, lmDir).get
+    val snap = StreamingPipeline.latestVersion(spark, lmDir).get
       .as[(String, Long)].collect().toSet
     val wantLm = Curation.unigramLm((b1 ++ b2).toDF("doc_id", "text"),
       "text").as[(String, Long)].collect().toSet
@@ -1017,7 +1017,7 @@ class StreamingSpec extends SparkSpec {
     // must score against v00000 only and converge to the same LM
     run(b1, 1L)
     assert(emitted.head._2 == firstB1)
-    val snap = StreamingPipeline.unigramLmSnapshot(spark, lmDir).get
+    val snap = StreamingPipeline.latestVersion(spark, lmDir).get
       .as[(String, Long)].collect().toMap
     // a, b, c from b0 plus zz from b1 — counted once despite the replay
     assert(snap == Map("a" -> 3L, "b" -> 2L, "c" -> 1L, "zz" -> 2L))
@@ -1215,7 +1215,7 @@ class StreamingSpec extends SparkSpec {
     mem.addData((2L, "B", 2), (3L, "C", 2))
     q.processAllAvailable()
     q.stop()
-    val latest = StreamingPipeline.latestSnapshot(spark, dir).get
+    val latest = StreamingPipeline.latestVersion(spark, dir).get
       .select("k", "v").as[(Long, String)].collect().toSet
     assert(latest == Set((1L, "a"), (2L, "B"), (3L, "C")))
     // the v0 snapshot is still intact (readers of the old version are
@@ -1410,5 +1410,92 @@ class StreamingSpec extends SparkSpec {
     val before = emissions(1L)
     run(1)
     assert(emissions(1L) == before, "batch replay changed the rollup")
+  }
+
+  test("decontamination: a batch's benchmark rows reach the snapshot " +
+    "even when onBatch stops early (take(1))") {
+    val snapDir = Files.createTempDirectory("graft-decontam-take").toString
+    val cents = Seq(Seq(1.0, 0.0, 0.0), Seq(0.0, 1.0, 1.0))
+    StreamingPipeline.decontamBatch(
+      Seq((100L, Seq(1.0f, 0.0f, 0.0f), true))
+        .toDF("vec_id", "embedding", "is_bench"), 0L, "is_bench",
+      cents, 0.9, snapDir, "vec_id", "embedding") { (res, _) =>
+      res.collect(); ()
+    }
+    // 4 ordered partitions of 2 rows: train rows fill the first three,
+    // the benchmark rows only the last. The per-vector rollup's shuffle
+    // makes take(1) read every partition today, so this case guards the
+    // write decision against a plan without that shuffle; the Bloom case
+    // below has a map-only probe and shows the undercount itself.
+    val rows = (1L to 6L).map(i => (i, Seq(0.99f, 0.01f, 0.0f), false)) ++
+      Seq((101L, Seq(0.0f, 1.0f, 0.0f), true),
+        (102L, Seq(0.0f, 1.0f, 1.0f), true))
+    val batch = spark.sparkContext.parallelize(rows, 4)
+      .toDF("vec_id", "embedding", "is_bench")
+    StreamingPipeline.decontamBatch(batch, 1L, "is_bench", cents, 0.9,
+      snapDir, "vec_id", "embedding") { (res, _) => res.take(1); () }
+    val snap = StreamingPipeline.latestVersion(spark, snapDir).get
+      .select("bench_id").as[Long].collect().toSet
+    assert(snap == Set(100L, 101L, 102L),
+      s"batch 1's benchmark rows are missing from the snapshot: $snap")
+  }
+
+  test("Bloom decontamination: a batch's benchmark rows reach the word " +
+    "store even when onBatch stops early (take(1))") {
+    import graft.operators.Curation
+    val storeDir = Files.createTempDirectory("graft-bloom-take").toString
+    val m = 1 << 14
+    val benchText = "the quick brown fox jumps over the lazy dog"
+    val bench2Text = "other benchmark sentence with different gram content"
+    StreamingPipeline.bloomDecontamBatch(
+      Seq((100L, benchText, true)).toDF("doc_id", "text", "is_bench"), 0L,
+      "is_bench", storeDir, 4, m, 3, 0.05, "doc_id", "text") { (res, _) =>
+      res.collect(); ()
+    }
+    // the probe is map-only, so take(1) reads only the first of these
+    // 4 partitions; the benchmark rows sit in the last
+    val rows = (1L to 6L).map(i => (i, s"train document number $i", false)) ++
+      Seq((101L, bench2Text, true), (102L, bench2Text, true))
+    val batch = spark.sparkContext.parallelize(rows, 4)
+      .toDF("doc_id", "text", "is_bench")
+    StreamingPipeline.bloomDecontamBatch(batch, 1L,
+      "is_bench", storeDir, 4, m, 3, 0.05, "doc_id", "text") { (res, _) =>
+      res.take(1); ()
+    }
+    val words = StreamingPipeline.latestVersion(spark, storeDir).get
+      .select("w", "bits").as[(Int, Long)].collect().toSeq
+    val want = Curation.bloomContaminationBits(
+      Seq((100L, benchText), (101L, bench2Text)).toDF("doc_id", "text"),
+      "text", n = 4, mBits = m, k = 3)
+    val got = Curation.bloomBitsFromWordRows(words, m)
+    val missing = want.indices.count(i => (want(i) & ~got(i)) != 0L)
+    assert(missing == 0 && got.sameElements(want),
+      s"batch 1's benchmark grams are missing: $missing words lack bits")
+  }
+
+  test("latestVersion orders versions by number: v100000 follows v99999") {
+    val dir = Files.createTempDirectory("graft-versions").toString
+    Seq(1L).toDF("k").write.parquet(s"$dir/v99999")
+    Seq(2L).toDF("k").write.parquet(s"$dir/v100000")
+    assert(StreamingPipeline.latestVersion(spark, dir).get.as[Long]
+      .collect().toSeq == Seq(2L))
+  }
+
+  test("minHashDedupStream refuses MinHash state in the old bands/ + " +
+    "shingles/ layout instead of re-admitting every earlier document") {
+    implicit val sqlCtx = spark.sqlContext
+    val stateDir = Files.createTempDirectory("graft-mhs-legacy").toFile
+    new java.io.File(stateDir, "bands/b00000").mkdirs()
+    new java.io.File(stateDir, "shingles/b00000").mkdirs()
+    val docs = MemoryStream[(Long, String)].toDF().toDF("doc_id", "text")
+    def start() = StreamingPipeline.minHashDedupStream(docs, "doc_id",
+      "text", stateDir.getPath) { (_, _) => () }
+    val e = intercept[IllegalStateException](start())
+    assert(e.getMessage.contains(s"$stateDir/bands") &&
+      e.getMessage.contains(s"$stateDir/shingles"), e.getMessage)
+    // once store/ holds batch state, the leftover dirs are not the only
+    // history and the stream starts
+    new java.io.File(stateDir, "store/b00001").mkdirs()
+    start()
   }
 }
